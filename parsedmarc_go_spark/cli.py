@@ -30,6 +30,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parsedmarc_go_spark import caching
+
 VERSION = "1.0.0"  # tracks the reference's const version, main.go:26
 
 
@@ -101,6 +103,9 @@ def _spark_csv_lines(df: DataFrame) -> list[str]:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+# one scope per one-shot: the intermediates ingest_files caches are
+# released when the one-shot returns
+@caching.scope()
 def run_one_shot(spark: SparkSession, cfg, args) -> int:
     from parsedmarc_go_spark.sinks.writers import (
         aggregate_csv_projection,

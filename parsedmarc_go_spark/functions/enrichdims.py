@@ -392,16 +392,25 @@ def geo_dim_from_csv(
     """GeoLite2 CSV distribution → the same interval dim, fully
     distributed (the CSV form is the scale path for dim refresh jobs):
     Blocks-IPv4 (network CIDR, geoname_id) ⋈ Locations (geoname_id,
-    country_name, city_name). CIDR → [start, end] is pure arithmetic."""
+    country_name, city_name). CIDR → [start, end] is pure arithmetic.
+
+    Locations columns are selected by header name, so MaxMind's own
+    files (GeoLite2-Country-Locations-en.csv: locale_code second,
+    country_name sixth, no city_name) and a bare three-column
+    (geoname_id, country_name, city_name) file both load; city is ''
+    when the file has no city_name column."""
     blocks = (
         spark.read.option("header", True)
         .schema("network string, geoname_id long, registered_country_geoname_id long")
         .csv(blocks_csv)
     )
-    locations = (
-        spark.read.option("header", True)
-        .schema("geoname_id long, country_name string, city_name string")
-        .csv(locations_csv)
+    raw_locations = spark.read.option("header", True).csv(locations_csv)
+    locations = raw_locations.select(
+        F.col("geoname_id").cast("long").alias("geoname_id"),
+        "country_name",
+        (F.col("city_name") if "city_name" in raw_locations.columns else F.lit("")).alias(
+            "city_name"
+        ),
     )
     from parsedmarc_go_spark.functions.enrich import ipv4_to_long
 

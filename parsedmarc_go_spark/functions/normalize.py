@@ -65,6 +65,14 @@ def strip_to_feedback(xml_text: Column) -> Column:
 _MAX_RANGE_SECONDS = 48 * 3600  # parser.go:1174-1176 (tolerates up to 48 h)
 
 
+def has_bad_record_count(fb: Column) -> Column:
+    """True when some record's <count> is present but not an integer."""
+    return F.exists(
+        F.coalesce(fb["record"], F.array()),
+        lambda r: r["row"]["count"].isNotNull() & r["row"]["count"].try_cast("int").isNull(),
+    )
+
+
 def aggregate_validity(fb: Column) -> Column:
     """F1/F2 accept predicate for a parsed <feedback> struct: XML decoded,
     both dates epoch-parseable, end-begin ≤ 48 h, and every record's
@@ -74,17 +82,13 @@ def aggregate_validity(fb: Column) -> Column:
     coalescing it to 0 would undercount instead of quarantining."""
     begin = fb["report_metadata"]["date_range"]["begin"].try_cast("long")
     end = fb["report_metadata"]["date_range"]["end"].try_cast("long")
-    bad_count = F.exists(
-        F.coalesce(fb["record"], F.array()),
-        lambda r: r["row"]["count"].isNotNull() & r["row"]["count"].try_cast("int").isNull(),
-    )
     return (
         fb["_corrupt_record"].isNull()
         & fb["report_metadata"].isNotNull()
         & begin.isNotNull()
         & end.isNotNull()
         & ((end - begin) <= F.lit(_MAX_RANGE_SECONDS))
-        & ~bad_count
+        & ~has_bad_record_count(fb)
     )
 
 

@@ -4,9 +4,11 @@ binaryFile scan (S1-S2) → extraction pandas UDF (S3-S5, S8-S13) →
 report-type routing (S14) → per-family parse (S6 from_xml / S7
 from_json / forensic struct) → normalize → flat analytic tables.
 
-One job, no shuffles until the analytics queries; per-file error
-isolation lands rejects in a quarantine DataFrame instead of failing
-the batch (parser.go:116-132 logs and continues; main.go:269-290).
+One scan and two persisted intermediates (the extracted and the parsed
+<feedback> frames, see `ingest_files`), released by the caller's
+`caching.scope()`; no shuffles until the analytics queries. Per-file
+error isolation lands rejects in a quarantine DataFrame instead of
+failing the batch (parser.go:116-132 logs and continues; main.go:269-290).
 """
 
 from __future__ import annotations
@@ -16,10 +18,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parsedmarc_go_spark.caching import scoped_persist
 from parsedmarc_go_spark.functions.normalize import (
     aggregate_records_flat,
     aggregate_reports_flat,
     aggregate_validity,
+    has_bad_record_count,
     ingest_ts,
     strip_to_feedback,
 )
@@ -70,24 +74,27 @@ class IngestResult:
     rejects: DataFrame  # (path, kind, error)
 
 
-def parse_aggregate(
-    extracted: DataFrame, as_of: str | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """S6: wrapper strip → from_xml (PERMISSIVE, corrupt column) →
-    validity gate (F1/F2) → parent + fact projections."""
-    agg = extracted.filter(F.col("kind") == "aggregate").select(
-        "path", strip_to_feedback(F.col("payload")).alias("payload")
-    )
-    parsed = agg.select(
+def parse_feedback(extracted: DataFrame) -> DataFrame:
+    """S6, first half: wrapper strip → from_xml (PERMISSIVE, corrupt
+    column) over the aggregate rows, giving (path, fb)."""
+    return extracted.filter(F.col("kind") == "aggregate").select(
         "path",
         F.from_xml(
-            "payload",
+            strip_to_feedback(F.col("payload")),
             AGGREGATE_FEEDBACK_SCHEMA,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ).alias("fb"),
     )
-    ok = parsed.filter(aggregate_validity(F.col("fb")))
-    bad = parsed.filter(~aggregate_validity(F.col("fb"))).select(
+
+
+def aggregate_tables(
+    parsed: DataFrame, as_of: str | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """S6, second half: validity gate (F1/F2) over `parse_feedback`'s
+    (path, fb) → parent and fact projections plus the rejects."""
+    fb = F.col("fb")
+    ok = parsed.filter(aggregate_validity(fb))
+    bad = parsed.filter(~aggregate_validity(fb)).select(
         "path",
         F.lit("aggregate").alias("kind"),
         F.coalesce(
@@ -97,6 +104,7 @@ def parse_aggregate(
                 | F.col("fb.report_metadata.date_range.end").try_cast("long").isNull(),
                 "invalid date range",
             ),
+            F.when(has_bad_record_count(fb), "invalid record count"),
             F.lit("time span > 24 hours - RFC 7489 section 7.2"),
         ).alias("error"),
     )
@@ -105,6 +113,14 @@ def parse_aggregate(
         aggregate_records_flat(ok, as_of=as_of),
         bad,
     )
+
+
+def parse_aggregate(
+    extracted: DataFrame, as_of: str | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """S6: `parse_feedback` then `aggregate_tables` — (reports,
+    records, rejects) from an extracted frame."""
+    return aggregate_tables(parse_feedback(extracted), as_of)
 
 
 def parse_forensic(extracted: DataFrame, as_of: str | None = None) -> DataFrame:
@@ -235,9 +251,20 @@ def ingest_files(files: DataFrame, as_of: str | None = None) -> IngestResult:
     binaryFile scan (`read_report_files`) or a compacted landing archive
     (`storage.read_compacted_landing`), which is how the one-file-one-row
     trade-off of binaryFile is retired at 100 TB: consolidate once,
-    re-ingest from chunky parquet forever after."""
-    extracted = extract_reports(files)
-    agg_reports, agg_records, agg_bad = parse_aggregate(extracted, as_of)
+    re-ingest from chunky parquet forever after.
+
+    Caching contract: the extracted frame and the parsed <feedback>
+    frame are persisted through `caching.scoped_persist` and filled by
+    the first action on any output, so later outputs and counts read
+    them instead of rescanning `files` and re-running from_xml. Call it
+    inside `caching.scope()` to release both when the block exits;
+    outside a scope they are released at the next gate boundary on
+    this thread or by `caching.release_intermediates()`. Until then a
+    re-ingest of an unchanged plan (the same path) is served from the
+    cache, so files that changed in between are not seen."""
+    extracted = scoped_persist(extract_reports(files))
+    feedback = scoped_persist(parse_feedback(extracted))
+    agg_reports, agg_records, agg_bad = aggregate_tables(feedback, as_of)
     forensic = parse_forensic(extracted, as_of)
     tls_reports, tls_failures, tls_bad = parse_smtp_tls(extracted, as_of)
     hard_errors = extracted.filter(F.col("kind") == "error").select(

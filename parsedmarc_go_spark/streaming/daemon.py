@@ -20,24 +20,22 @@ appending duplicates. (Plain `append` here would silently degrade to
 at-least-once across the five non-atomic writes.) Readers drop the
 bookkeeping column via `read_stream_table`.
 
-Batch/stream parity is structural: foreachBatch calls the identical
-parse functions the batch path uses, so tests assert table equality.
+Batch/stream parity is structural: foreachBatch runs the same
+`ingest_files` fan-out the batch path uses, so tests assert table
+equality.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from parsedmarc_go_spark.sources.ingest import (
-    extract_reports,
-    parse_aggregate,
-    parse_forensic,
-    parse_smtp_tls,
-)
+from parsedmarc_go_spark import caching
+from parsedmarc_go_spark.sources.ingest import ingest_files
 
 BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
@@ -96,54 +94,48 @@ def make_batch_processor(
         from parsedmarc_go_spark.functions.enrich import enrich_records
 
         spark = batch.sparkSession
-        extracted = extract_reports(batch).cache()
-        prev_overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
+        # the scope releases the batch's cached intermediates on every
+        # way out, a failed table write included
+        with caching.scope():
             # `as_of` pins the ingest clock: with it set, a crash-and-
             # replay of batch N rewrites byte-identical files (created_at
             # included) instead of merely row-equivalent ones
-            agg_reports, agg_records, agg_bad = parse_aggregate(extracted, as_of)
-            forensic = parse_forensic(extracted, as_of)
-            tls_reports, tls_failures, tls_bad = parse_smtp_tls(extracted, as_of)
+            res = ingest_files(batch, as_of)
             if enrichment is not None:
-                agg_records = enrich_records(agg_records, enrichment)
-                forensic = enrich_records(forensic, enrichment)
-            hard = extracted.filter(F.col("kind") == "error").select(
-                "path", F.lit("unknown").alias("kind"), "error"
-            )
-            outputs = {
-                "aggregate_reports": agg_reports,
-                "aggregate_records": agg_records,
-                "forensic_reports": forensic,
-                "smtp_tls_reports": tls_reports,
-                "smtp_tls_failures": tls_failures,
-                "rejects": hard.unionByName(agg_bad).unionByName(tls_bad),
-            }
+                res = dataclasses.replace(
+                    res,
+                    aggregate_records=enrich_records(res.aggregate_records, enrichment),
+                    forensic_reports=enrich_records(res.forensic_reports, enrichment),
+                )
             # idempotent commit: a replay of batch N replaces batch N's
             # files and touches nothing else (see _write_table)
+            prev_overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            for name, df in outputs.items():
-                _write_table(df, out_dir, name, batch_id)
+            try:
+                for name in STREAM_TABLES:
+                    _write_table(getattr(res, name), out_dir, name, batch_id)
+            finally:
+                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode)
             if metrics_path:
                 from parsedmarc_go_spark.metrics import (
                     escape_label_value,
                     write_metrics_textfile,
                 )
 
-                # counts re-derive from the cached `extracted` frame, so
-                # these are cheap follow-up jobs, not a second file scan
+                # the counts read the batch's cached extracted and parsed
+                # frames: no second file scan or from_xml pass
                 contrib: dict[tuple[str, str], float] = {}
                 for family, df in (
-                    ("aggregate", agg_reports),
-                    ("forensic", forensic),
-                    ("smtp_tls", tls_reports),
+                    ("aggregate", res.aggregate_reports),
+                    ("forensic", res.forensic_reports),
+                    ("smtp_tls", res.smtp_tls_reports),
                 ):
                     key = (
                         "parsedmarc_parser_reports_total",
                         f'type="{family}",source="stream"',
                     )
                     contrib[key] = contrib.get(key, 0.0) + df.count()
-                for r in outputs["rejects"].groupBy("kind", "error").count().collect():
+                for r in res.rejects.groupBy("kind", "error").count().collect():
                     key = (
                         "parsedmarc_parser_failures_total",
                         f'type="{r["kind"]}",source="stream",'
@@ -156,9 +148,6 @@ def make_batch_processor(
                     for key, v in c.items():
                         totals[key] = totals.get(key, 0.0) + v
                 write_metrics_textfile(totals, metrics_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode)
-            extracted.unpersist()
 
     return process_batch
 

@@ -261,7 +261,7 @@ def test_geo_dim_from_mmdb_cluster_mode_spark_writes(spark, tmp_path, monkeypatc
     assert got == expected
 
 
-def test_geo_dim_from_csv(spark, tmp_path):
+def _geo_dim_rows(spark, tmp_path, locations: str) -> dict:
     blocks = tmp_path / "blocks.csv"
     blocks.write_text(
         "network,geoname_id,registered_country_geoname_id\n"
@@ -269,14 +269,35 @@ def test_geo_dim_from_csv(spark, tmp_path):
         "192.168.0.0/16,,200\n"
     )
     locs = tmp_path / "locs.csv"
-    locs.write_text(
-        "geoname_id,country_name,city_name\n100,United States,Dallas\n200,Germany,\n"
-    )
+    locs.write_text(locations)
     dim = geo_dim_from_csv(spark, str(blocks), str(locs))
-    rows = {r.start_ip: r for r in dim.collect()}
+    return {r.start_ip: r for r in dim.collect()}
+
+
+def test_geo_dim_from_csv(spark, tmp_path):
+    rows = _geo_dim_rows(
+        spark,
+        tmp_path,
+        "geoname_id,country_name,city_name\n100,United States,Dallas\n200,Germany,\n",
+    )
     assert rows[167772160].end_ip == 167772160 + (1 << 24) - 1
     assert rows[167772160].country == "United States" and rows[167772160].city == "Dallas"
     assert rows[3232235520].country == "Germany"
+
+
+def test_geo_dim_from_csv_maxmind_locations_layout(spark, tmp_path):
+    """MaxMind's GeoLite2-Country-Locations-en.csv: locale_code second,
+    country_name sixth, no city_name column."""
+    rows = _geo_dim_rows(
+        spark,
+        tmp_path,
+        "geoname_id,locale_code,continent_code,continent_name,country_iso_code,"
+        "country_name,is_in_european_union\n"
+        '100,en,NA,"North America",US,"United States",0\n'
+        "200,en,EU,Europe,DE,Germany,1\n",
+    )
+    assert rows[167772160].country == "United States" and rows[167772160].city == ""
+    assert rows[3232235520].country == "Germany" and rows[3232235520].city == ""
 
 
 # ---------------------------------------------------------------------------
