@@ -103,8 +103,6 @@ def _spark_csv_lines(df: DataFrame) -> list[str]:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-# one scope per one-shot: the intermediates ingest_files caches are
-# released when the one-shot returns
 @caching.scope()
 def run_one_shot(spark: SparkSession, cfg, args) -> int:
     from parsedmarc_go_spark.sinks.writers import (

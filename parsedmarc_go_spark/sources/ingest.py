@@ -18,7 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parsedmarc_go_spark.caching import scoped_persist
+from parsedmarc_go_spark.caching import release_intermediates, scoped_persist
 from parsedmarc_go_spark.functions.normalize import (
     aggregate_records_flat,
     aggregate_reports_flat,
@@ -259,9 +259,13 @@ def ingest_files(files: DataFrame, as_of: str | None = None) -> IngestResult:
     them instead of rescanning `files` and re-running from_xml. Call it
     inside `caching.scope()` to release both when the block exits;
     outside a scope they are released at the next gate boundary on
-    this thread or by `caching.release_intermediates()`. Until then a
-    re-ingest of an unchanged plan (the same path) is served from the
-    cache, so files that changed in between are not seen."""
+    this thread or by `caching.release_intermediates()`. Each call
+    first releases this thread's unscoped intermediates, so an unscoped
+    re-ingest of the same path rescans it instead of reading the
+    previous call's cache (two ingests inside one scope still share
+    it); a caller still holding the older result only loses its cache
+    reuse."""
+    release_intermediates()
     extracted = scoped_persist(extract_reports(files))
     feedback = scoped_persist(parse_feedback(extracted))
     agg_reports, agg_records, agg_bad = aggregate_tables(feedback, as_of)

@@ -206,3 +206,27 @@ def test_batch_processor_matches_ingest_and_releases_cache_on_crash(
     monkeypatch.setattr(daemon, "_write_table", real_write)
     daemon.make_batch_processor(crashed, as_of=AS_OF)(batch, 0)  # replay of batch 0
     assert tables(crashed) == expected
+
+
+def test_unscoped_reingest_sees_new_files(spark, tmp_path):
+    """Outside a scope, a second `ingest()` of a directory rescans it:
+    the first call's cached frames are released, not served again."""
+    from parsedmarc_go_spark import caching
+    from parsedmarc_go_spark.sources.ingest import ingest
+
+    spark.catalog.clearCache()  # start from a known-empty CacheManager
+    (tmp_path / "a.xml").write_text(_aggregate_xml("agg-a", ["1"]))
+    (tmp_path / "b.xml").write_text(_aggregate_xml("agg-b", ["2"]))
+    first = ingest(spark, str(tmp_path), as_of=AS_OF)
+    assert first.aggregate_reports.count() == 2
+    assert first.aggregate_records.count() == 2
+
+    (tmp_path / "c.xml").write_text(_aggregate_xml("agg-c", ["3", "4"]))
+    second = ingest(spark, str(tmp_path), as_of=AS_OF)
+    try:
+        assert second.aggregate_reports.count() == 3
+        assert second.aggregate_records.count() == 4
+        assert len(caching._LIVE) == 2, "the first call's frames were not released"
+    finally:
+        caching.release_intermediates()
+    assert _cache_is_empty(spark)
