@@ -13,8 +13,11 @@ for zero-extra-pass streaming counts:
   `parsedmarc_parser_report_size_bytes` histogram buckets of
   metrics.go:48-54) as a small DataFrame.
 - `observed_ingest(files)`: attaches an Observation to the ingest scan
-  so every action over the batch reports file/byte counts without a
-  second pass (the streaming daemon's per-batch counters).
+  so the first action over the batch reports file/byte counts without
+  a second pass. The streaming daemon sizes its table writes from the
+  observed batch bytes, and takes its reports/failures counters from
+  Observations on those writes (`streaming/daemon.py`) rather than
+  from `ingest_metrics`' counts.
 - `to_prometheus_textfile(...)`: renders the node-exporter textfile
   format, the standard drop-in for scrape-based setups.
 

@@ -64,7 +64,12 @@ def _assign_expr(cents: list[list[float]], vec_col: str) -> str:
     duplicated the whole sims tree (HOF lambdas evaluate interpreted,
     with no common-subexpression elimination). Strict ``>`` keeps the
     earlier index on ties — exactly array_position's first-match
-    rule."""
+    rule.
+
+    A non-finite component has no SQL literal (``nanD`` does not
+    parse), so it is rejected here with a ValueError."""
+    if not all(math.isfinite(x) for c in cents for x in c):
+        raise ValueError("centroids must be finite; got a NaN or infinite component")
     k = len(cents)
     dots = ", ".join(
         "aggregate(zip_with({v}, array({lits}), (a, b) -> a * b), 0D, "

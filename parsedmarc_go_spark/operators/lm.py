@@ -163,6 +163,7 @@ def lm_score(
     ln, but the extra probe-table builds tripled the small-table
     exchange count and the gate ran 2x slower at sf0.1; the per-pair
     ln over two already-probed longs is not where the time is.)"""
+    _check_alpha(alpha)
     sc = corpus.sparkSession.sparkContext
     mark = F.broadcast if broadcast_lm else (lambda df: df)
     # repartition only when the scan is under-parallel (the
@@ -199,6 +200,13 @@ def lm_score(
     )
 
 
+def _check_alpha(alpha: float) -> None:
+    """Smoothing must be positive: with alpha = 0 an unseen bigram's
+    log(0) is NULL, which count(lp_fp) would silently skip."""
+    if not alpha > 0:
+        raise ValueError(f"alpha must be > 0, got {alpha!r}")
+
+
 def _lp_fp(prefix: str, alpha: float) -> "F.Column":
     """The grid-quantized add-alpha log-prob expression over a probed
     pair row whose LM columns carry ``prefix`` (see dsir_log_weights'
@@ -233,6 +241,7 @@ def dsir_log_weights(
     ``log_w = 0`` (weight 1, no evidence either way).
 
     Returns ``doc_id, n_bigrams, log_w``."""
+    _check_alpha(alpha)
     sc = corpus.sparkSession.sparkContext
     mark = F.broadcast if broadcast_lm else (lambda df: df)
 

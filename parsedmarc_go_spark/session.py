@@ -9,6 +9,13 @@ Defaults chosen for correctness-at-scale first:
   any scale factor without hand-tuning.
 - Arrow on: every Python-side exchange (the extraction UDFs are the only
   Python hot path) moves in columnar batches.
+- Local masters list files on the driver. The streaming file source
+  builds each micro-batch over explicit file paths, and past
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths
+  Spark lists them in a job of its own, one task per path. On
+  ``local[N]`` those tasks run on the driver's own threads, so the job
+  buys nothing; ``get_spark`` raises the threshold there. Masters given
+  by spark-submit or an existing session keep Spark's default.
 
 On a real cluster, ``spark.sql.shuffle.partitions`` should be ~2-3x the
 total executor cores; tests/bench pass it explicitly for local[N].
@@ -51,13 +58,19 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-        if master.startswith("local") and not (extra_confs or {}).get("spark.driver.memory"):
-            # local[N] runs everything in one JVM whose default 1g heap
-            # OOMs under N-way task concurrency at bench+ corpus sizes;
-            # on a real cluster the submitter sizes executors instead
+        if master.startswith("local"):
+            # list explicit file paths on the driver at any count: the
+            # executors of a local master are the driver's own threads
             builder = builder.config(
-                "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+                "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
             )
+            if not (extra_confs or {}).get("spark.driver.memory"):
+                # local[N] runs everything in one JVM whose default 1g heap
+                # OOMs under N-way task concurrency at bench+ corpus sizes;
+                # on a real cluster the submitter sizes executors instead
+                builder = builder.config(
+                    "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+                )
     for k, v in DEFAULT_CONFS.items():
         builder = builder.config(k, v)
     if shuffle_partitions is not None:

@@ -148,12 +148,14 @@ class ReportHTTPReceiver:
                         limiters[self.client_address[0]] = bucket
                     return bucket.allow()
 
+            # every request is counted before its reply goes out: a
+            # client holding the reply may scrape /metrics right away
             def _json(self, status: int, body: bytes) -> None:
+                self._count(status)
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
                 self.end_headers()
                 self.wfile.write(body)
-                self._count(status)
 
             def _handle(self) -> None:
                 if not self._allow():
@@ -163,22 +165,22 @@ class ReportHTTPReceiver:
                 # gin routes on the path with the query string excluded
                 # (server.go router); stdlib self.path keeps it — strip.
                 if urlsplit(self.path).path not in ("/dmarc/report", "/dmarc/report/"):
-                    self.send_error(404)
                     self._count(404)
+                    self.send_error(404)
                     return
                 ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
                 if ctype not in ACCEPTED_CONTENT_TYPES:
-                    self.send_error(415, f"unsupported content type {ctype!r}")
                     self._count(415)
+                    self.send_error(415, f"unsupported content type {ctype!r}")
                     return
                 length = int(self.headers.get("Content-Length") or 0)
                 if length <= 0:
-                    self.send_error(400, "empty body")
                     self._count(400)
+                    self.send_error(400, "empty body")
                     return
                 if length > max_upload:
-                    self.send_error(413, f"body exceeds {max_upload} byte limit")
                     self._count(413)
+                    self.send_error(413, f"body exceeds {max_upload} byte limit")
                     return
                 body = self.rfile.read(length)
                 _land(landing, "http", body)
@@ -216,14 +218,14 @@ class ReportHTTPReceiver:
                         with open(metrics_textfile, encoding="utf-8") as f:
                             lines.append(f.read().rstrip("\n"))
                     payload = ("\n".join(lines) + "\n").encode()
+                    self._count(200)
                     self.send_response(200)
                     self.send_header("Content-Type", "text/plain; version=0.0.4")
                     self.end_headers()
                     self.wfile.write(payload)
-                    self._count(200)
                     return
-                self.send_error(404)
                 self._count(404)
+                self.send_error(404)
 
             do_POST = _handle
             do_PUT = _handle

@@ -210,35 +210,29 @@ def make_curation_processor(
         )
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            outputs = {
-                "docs_redacted": batch.select(
-                    "doc_id", pii_redact(F.col(text_col)).alias(text_col)
-                ),
-                "repetition_stats": repetition_stats(batch, text_col),
-                "decontamination": ngram_decontaminate(
-                    batch, n=n, text_col=text_col, bench_ngrams=bench_ngrams
-                ),
-            }
-            if lm is not None:
-                outputs[LM_TABLE] = lm_score(batch, *lm, text_col=text_col)
-            if nb is not None:
-                outputs[NB_TABLE] = nb_score(batch, nb, text_col=text_col)
-            if emit_postings:
-                from parsedmarc_go_spark.operators.retrieval import (
-                    inverted_postings,
-                )
+        outputs = {
+            "docs_redacted": batch.select(
+                "doc_id", pii_redact(F.col(text_col)).alias(text_col)
+            ),
+            "repetition_stats": repetition_stats(batch, text_col),
+            "decontamination": ngram_decontaminate(
+                batch, n=n, text_col=text_col, bench_ngrams=bench_ngrams
+            ),
+        }
+        if lm is not None:
+            outputs[LM_TABLE] = lm_score(batch, *lm, text_col=text_col)
+        if nb is not None:
+            outputs[NB_TABLE] = nb_score(batch, nb, text_col=text_col)
+        if emit_postings:
+            from parsedmarc_go_spark.operators.retrieval import (
+                inverted_postings,
+            )
 
-                outputs[POSTINGS_TABLE] = inverted_postings(
-                    batch, text_col=text_col
-                )
-            for name, df in outputs.items():
-                _write_table(df, out_dir, name, batch_id)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            outputs[POSTINGS_TABLE] = inverted_postings(
+                batch, text_col=text_col
+            )
+        for name, df in outputs.items():
+            _write_table(df, out_dir, name, batch_id)
 
     return process_batch
 

@@ -1,15 +1,21 @@
-"""The shared ingest fan-out on a report tree built here, so it runs
+"""The shared ingest fan-out on report trees built here, so it runs
 without the reference sample corpus: the CLI one-shot reads each input
 file once and leaves no cached plan behind, the daemon's batch body
 writes the same tables as `ingest()` and releases its cache when a
-table write fails, and every aggregate reject carries its own reason."""
+table write fails, a daemon drain lists its files on the driver and
+writes one file per table, its metrics counters equal the tables and
+survive a replay, and every aggregate reject carries its own reason."""
 
 from __future__ import annotations
 
 import glob
 import gzip
+import importlib.util
 import json
 import os
+import random
+import re
+import sys
 
 import pytest
 
@@ -189,19 +195,21 @@ def test_batch_processor_matches_ingest_and_releases_cache_on_crash(
     assert len(got["aggregate_records"]) == 3 and len(got["rejects"]) == 1
 
     real_write = daemon._write_table
-    calls = {"n": 0}
 
     def dying_write(df, out_dir, name, batch_id):
+        # by table name, not call order: the writes run concurrently
+        if name == "aggregate_records":
+            raise RuntimeError("injected: daemon killed before aggregate_records")
         real_write(df, out_dir, name, batch_id)
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("injected: daemon killed after table 2")
 
     crashed = str(tmp_path / "crashed")
     monkeypatch.setattr(daemon, "_write_table", dying_write)
     with pytest.raises(RuntimeError, match="injected"):
         daemon.make_batch_processor(crashed, as_of=AS_OF)(batch, 0)
     assert _cache_is_empty(spark), "a failed batch left its cached plans behind"
+    landed = [t for t in daemon.STREAM_TABLES
+              if os.path.isdir(os.path.join(crashed, t, "__batch_id=0"))]
+    assert "aggregate_records" not in landed and landed, landed
 
     monkeypatch.setattr(daemon, "_write_table", real_write)
     daemon.make_batch_processor(crashed, as_of=AS_OF)(batch, 0)  # replay of batch 0
@@ -230,3 +238,107 @@ def test_unscoped_reingest_sees_new_files(spark, tmp_path):
     finally:
         caching.release_intermediates()
     assert _cache_is_empty(spark)
+
+
+def _generator():
+    """The benchmark's seeded report generator, imported read-only."""
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench", "gen.py")
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    gen = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    return gen
+
+
+def _jobs_after(spark, after_job: int) -> list:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = _seq(spark.sparkContext._jsc.sc().statusStore().jobsList(None))
+    return [j for j in jobs if j.jobId() > after_job]
+
+
+def _prom_counters(text: str) -> dict[str, int]:
+    """'name{labels}' -> value for every sample line of a textfile."""
+    return {m[1]: int(m[2]) for m in re.finditer(r"^([^#\n].*) (\d+)$", text, re.M)}
+
+
+def _table_counters(spark, out: str) -> dict[str, int]:
+    """The counters the daemon must publish, recomputed from its tables."""
+    from parsedmarc_go_spark.metrics import escape_label_value
+    from parsedmarc_go_spark.streaming.daemon import REPORT_FAMILIES, read_stream_table
+
+    def rows(t: str):
+        has_files = glob.glob(os.path.join(out, t, "__batch_id=*", "*.parquet"))
+        return read_stream_table(spark, out, t) if has_files else None
+
+    want = {}
+    for table, family in REPORT_FAMILIES.items():
+        df = rows(table)
+        want[f'parsedmarc_parser_reports_total{{type="{family}",source="stream"}}'] = (
+            df.count() if df is not None else 0)
+    rejects = rows("rejects")
+    for r in rejects.groupBy("kind", "error").count().collect() if rejects is not None else []:
+        want[f'parsedmarc_parser_failures_total{{type="{r["kind"]}",source="stream",'
+             f'reason="{escape_label_value(r["error"] or "")}"}}'] = r["count"]
+    return want
+
+
+def test_daemon_drain_lists_on_driver_and_writes_one_file_per_table(spark, tmp_path):
+    """A drain of more than 32 files (the parallel listing threshold)
+    runs no listing job, writes each non-empty table as one parquet
+    file, and publishes counters equal to the tables it wrote."""
+    from parsedmarc_go_spark.streaming.daemon import STREAM_TABLES, stream_ingest
+
+    gen = _generator()
+    rng = random.Random(11)
+    files, tally = gen.mixed_batch(rng, gen.make_geo(rng), "t", n_files=40, n_records=160)
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    gen.write_batch(landing, files)
+    mpath = str(tmp_path / "metrics.prom")
+
+    spark.catalog.clearCache()  # start from a known-empty CacheManager
+    last_job = max((j.jobId() for j in _jobs_after(spark, -1)), default=-1)
+    q = stream_ingest(spark, landing, out, str(tmp_path / "ckpt"), available_now=True,
+                      metrics_path=mpath, as_of=gen.AS_OF)
+    q.awaitTermination()
+    assert q.lastProgress["numInputRows"] == len(files)
+
+    descriptions = [j.description().getOrElse(None) or "" for j in _jobs_after(spark, last_job)]
+    assert not [d for d in descriptions if d.startswith("Listing leaf files")], descriptions
+
+    per_table = {t: len(glob.glob(os.path.join(out, t, "__batch_id=0", "*.parquet")))
+                 for t in STREAM_TABLES}
+    assert per_table == dict.fromkeys(STREAM_TABLES, 1), per_table
+    assert _cache_is_empty(spark)
+
+    got = _prom_counters(open(mpath).read())
+    assert got == _table_counters(spark, out)
+    assert got['parsedmarc_parser_reports_total{type="aggregate",source="stream"}'] == tally.reports
+    assert got['parsedmarc_parser_reports_total{type="forensic",source="stream"}'] == tally.forensic
+    failures = sum(v for k, v in got.items() if k.startswith("parsedmarc_parser_failures_total"))
+    assert failures == sum(tally.rejects.values())
+
+
+def test_batch_processor_counters_survive_replay(spark, report_tree, tmp_path):
+    """Replaying batch 0 leaves every counter as it was; batch 1 adds
+    its own contribution."""
+    from parsedmarc_go_spark.sources.ingest import read_report_files
+    from parsedmarc_go_spark.streaming.daemon import make_batch_processor
+
+    batch = read_report_files(spark, report_tree)
+    out, mpath = str(tmp_path / "out"), str(tmp_path / "metrics.prom")
+    proc = make_batch_processor(out, metrics_path=mpath, as_of=AS_OF)
+    proc(batch, 0)
+    first = _prom_counters(open(mpath).read())
+    assert first == _table_counters(spark, out)
+    assert first == {
+        'parsedmarc_parser_reports_total{type="aggregate",source="stream"}': 2,
+        'parsedmarc_parser_reports_total{type="forensic",source="stream"}': 0,
+        'parsedmarc_parser_reports_total{type="smtp_tls",source="stream"}': 1,
+        'parsedmarc_parser_failures_total{type="aggregate",source="stream",'
+        'reason="xml parse failed"}': 1,
+    }
+
+    proc(batch, 0)  # crash-replay of the same micro-batch
+    assert _prom_counters(open(mpath).read()) == first
+    proc(batch, 1)
+    assert _prom_counters(open(mpath).read()) == {k: 2 * v for k, v in first.items()}
+    assert _prom_counters(open(mpath).read()) == _table_counters(spark, out)

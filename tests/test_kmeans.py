@@ -114,6 +114,16 @@ def test_literal_budget_guard(spark):
         assign_cells(df, big)
 
 
+@pytest.mark.parametrize("bad", [math.nan, math.inf])
+def test_non_finite_centroid_is_rejected(spark, bad):
+    """A NaN or infinite centroid component has no SQL literal; it fails
+    with a ValueError, not an AnalysisException at plan time."""
+    df = _planted(spark)
+    cents = [[1.0] + [0.0] * 7, [0.0, bad] + [0.0] * 6]
+    with pytest.raises(ValueError, match="centroids must be finite"):
+        assign_cells(df, cents)
+
+
 def test_trained_ivf_agrees_with_brute_force(spark):
     from parsedmarc_go_spark.operators.similarity import (
         brute_force_topk,

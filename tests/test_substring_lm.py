@@ -347,6 +347,23 @@ def test_dsir_sample_is_deterministic_weighted_topk(spark):
     assert len(dsir_sample(corpus, lm_t, lm_r, k=40).collect()) == 40
 
 
+def test_lm_entry_points_reject_non_positive_alpha(spark):
+    """With alpha = 0 an unseen bigram's log(0) is NULL and n_bigrams /
+    nll would silently undercount; every entry point refuses it."""
+    from parsedmarc_go_spark.operators.lm import dsir_log_weights, dsir_sample
+
+    ref = spark.createDataFrame(LM_REF, ["doc_id", "text"])
+    corpus = spark.createDataFrame(LM_CORPUS, ["doc_id", "text"])
+    lm = train_bigram_lm(ref)
+    for alpha in (0.0, -0.5):
+        with pytest.raises(ValueError, match="alpha must be > 0"):
+            lm_score(corpus, *lm, alpha=alpha)
+        with pytest.raises(ValueError, match="alpha must be > 0"):
+            dsir_log_weights(corpus, lm, lm, alpha=alpha)
+        with pytest.raises(ValueError, match="alpha must be > 0"):
+            dsir_sample(corpus, lm, lm, k=1, alpha=alpha)
+
+
 NB_LABELED = [
     ("hq", "the cat sat on the mat"),
     ("hq", "a dog sat on a rug"),
