@@ -39,6 +39,17 @@ def _flag(parser: argparse.ArgumentParser, name: str, **kw) -> None:
     parser.add_argument(f"-{name}", f"--{name}", **kw)
 
 
+def _as_of(value: str) -> str:
+    """-as-of: empty (wall clock) or a timestamp the ingest clock can
+    pin; anything else is a usage error before any Spark job."""
+    from parsedmarc_go_spark.functions.normalize import check_as_of
+
+    try:
+        return check_as_of(value) if value else value
+    except ValueError as e:
+        raise argparse.ArgumentTypeError(str(e)) from None
+
+
 def build_arg_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="parsedmarc-go-spark",
@@ -54,6 +65,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
         p,
         "as-of",
         default="",
+        type=_as_of,
         help="Pin the ingest clock (yyyy-MM-dd HH:mm:ss) so created_at "
         "defaults are reproducible across re-ingests (default: wall clock)",
     )
@@ -247,6 +259,8 @@ def run_daemon(
         query.stop()
         if receiver is not None:
             receiver.stop()
+        if enrichment is not None:
+            enrichment.release()
     return 0
 
 

@@ -15,6 +15,14 @@ tables:
   external batch step that lands a (ip, hostname) dim — the engine
   consumes the dim. Offline mode (the default) skips it, exactly like
   the reference.
+
+The dims are prepared once per `EnrichmentContext`: on first use the
+bucket-exploded GeoIP dims and the lower-cased sender map are
+persisted, and every later batch joins those cached frames. The fact
+side of each join is SQL text applied with one `selectExpr`, and
+`base_domain` / `ipv4_to_long` take the SQL text of the column they
+read (usually its name), so the driver builds a batch's enrichment in
+a handful of py4j calls.
 """
 
 from __future__ import annotations
@@ -25,49 +33,63 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def base_domain(col: Column) -> Column:
-    """P11 — utils.go:116-145: last two labels, with CDN special cases:
-    akamaiedge (3 labels keyed on 2nd-to-last label), cloudfront/fastly/
-    herokuapp (3 labels). Pure column expression over split()."""
-    parts = F.split(col, r"\.")
-    n = F.size(parts)
+def _base_domain_sql(e: str) -> str:
+    parts = f"split({e}, '\\\\.')"
+    n = f"size({parts})"
 
-    def p(i: int) -> Column:
-        # try_element_at: when() branches are not reliably short-circuited
+    def p(i: int) -> str:
+        # try_element_at: CASE branches are not reliably short-circuited
         # under ANSI mode, so out-of-range element_at would throw
-        return F.try_element_at(parts, F.lit(i))
+        return f"try_element_at({parts}, {i})"
 
-    last2 = F.concat_ws(".", p(-2), p(-1))
-    last3 = F.concat_ws(".", p(-3), p(-2), p(-1))
+    last2 = f"concat_ws('.', {p(-2)}, {p(-1)})"
+    last3 = f"concat_ws('.', {p(-3)}, {p(-2)}, {p(-1)})"
     return (
-        F.when(col.isNull() | (col == ""), col)
-        .when(n < 2, col)
-        .when((n >= 3) & (p(-2) == "akamaiedge"), last3)
-        .when((n >= 3) & last2.isin("cloudfront.net", "fastly.com", "herokuapp.com"), last3)
-        .otherwise(last2)
+        f"CASE WHEN {e} IS NULL OR {e} = '' THEN {e} WHEN {n} < 2 THEN {e}"
+        f" WHEN {n} >= 3 AND {p(-2)} = 'akamaiedge' THEN {last3}"
+        f" WHEN {n} >= 3 AND {last2} IN ('cloudfront.net', 'fastly.com', 'herokuapp.com')"
+        f" THEN {last3} ELSE {last2} END"
     )
 
 
-def ipv4_to_long(col: Column) -> Column:
-    """Dotted-quad IPv4 → int64 (NULL for malformed/IPv6), for the GeoIP
-    range join."""
-    oct_ = F.split(col, r"\.")
+def base_domain(e: str) -> Column:
+    """P11 — utils.go:116-145: last two labels of the host that SQL
+    text `e` evaluates to, with CDN special cases: akamaiedge (3 labels
+    keyed on 2nd-to-last label), cloudfront/fastly/herokuapp (3
+    labels). One SQL expression over split()."""
+    return F.expr(_base_domain_sql(e))
 
-    def o(i: int) -> Column:
-        # try_element_at: ANSI mode errors on out-of-bounds element_at,
-        # and when() does not short-circuit evaluation of the other branch
-        return F.try_element_at(oct_, F.lit(i)).try_cast("long")
 
-    value = o(1) * 16777216 + o(2) * 65536 + o(3) * 256 + o(4)
-    ok = (
-        (F.size(oct_) == 4)
-        & o(1).between(0, 255)
-        & o(2).between(0, 255)
-        & o(3).between(0, 255)
-        & o(4).between(0, 255)
-    )
-    return F.when(ok, value).otherwise(F.lit(None).cast("long"))
+def _ipv4_to_long_sql(e: str) -> str:
+    # try_element_at: ANSI mode errors on out-of-bounds element_at, and
+    # CASE does not short-circuit evaluation of the other branch
+    o = [f"try_cast(try_element_at(split({e}, '\\\\.'), {i}) AS BIGINT)" for i in (1, 2, 3, 4)]
+    ok = " AND ".join([f"size(split({e}, '\\\\.')) = 4", *(f"{x} BETWEEN 0 AND 255" for x in o)])
+    return f"CASE WHEN {ok} THEN {o[0]} * 16777216 + {o[1]} * 65536 + {o[2]} * 256 + {o[3]} END"
 
+
+def ipv4_to_long(e: str) -> Column:
+    """Dotted-quad IPv4 that SQL text `e` evaluates to → int64 (NULL
+    for malformed/IPv6), for the GeoIP range join."""
+    return F.expr(_ipv4_to_long_sql(e))
+
+
+def _q(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _in_place(columns: list[str], replace: dict[str, str]) -> list[str]:
+    """withColumn's semantics as one select list: `columns` in order,
+    each name in `replace` computed by its SQL in place, names new to
+    `columns` appended in `replace` order."""
+    rest = dict(replace)
+    out = [f"{rest.pop(c)} AS {_q(c)}" if c in rest else _q(c) for c in columns]
+    return out + [f"{sql} AS {_q(c)}" for c, sql in rest.items()]
+
+
+V4_BUCKET_BITS = 16  # geoip_enrich's default bucket width
+V6_BUCKET_BITS = 24  # geoip_enrich6's
 
 # sign-bit flip: maps unsigned 64-bit order onto signed int64 order, so
 # (hi, lo) lexicographic comparisons in the IPv6 interval join are
@@ -107,8 +129,9 @@ def with_ip_hilo(df: DataFrame, ip_col: str, out_col: str = "__ip_hilo") -> Data
     # regexp strip, not F.trim: trim removes only ' ' while the
     # whitespace-tolerance contract (and the test oracle's .strip())
     # covers tabs/newlines too
-    s = F.regexp_replace(F.col(ip_col), r"^\s+|\s+$", "")
-    v4 = F.when(s.rlike(_V4_STRICT_RE), ipv4_to_long(s))
+    s_sql = f"regexp_replace({ip_col}, '^\\\\s+|\\\\s+$', '')"
+    s = F.expr(s_sql)
+    v4 = F.when(s.rlike(_V4_STRICT_RE), ipv4_to_long(s_sql))
     # a trailing dotted quad ("::ffff:1.2.3.4") is rewritten into its
     # two hex groups; a malformed splice ("::ffff1.2.3.4") simply yields
     # a >4-hex-digit group that fails validation below — no special case
@@ -118,9 +141,9 @@ def with_ip_hilo(df: DataFrame, ip_col: str, out_col: str = "__ip_hilo") -> Data
         (F.col("__t") != "") & F.col("__t").rlike(_V4_STRICT_RE),
         F.concat(
             prefix,
-            F.hex(F.shiftright(ipv4_to_long(F.col("__t")), 16)),
+            F.hex(F.shiftright(ipv4_to_long("__t"), 16)),
             F.lit(":"),
-            F.hex(ipv4_to_long(F.col("__t")).bitwiseAND(F.lit(65535))),
+            F.hex(ipv4_to_long("__t").bitwiseAND(F.lit(65535))),
         ),
     ).otherwise(s)
 
@@ -161,7 +184,7 @@ def with_ip_hilo(df: DataFrame, ip_col: str, out_col: str = "__ip_hilo") -> Data
     n_named = F.size(F.col("__lg")) + F.size(F.col("__rg"))
     ok6 = (
         F.col(ip_col).contains(":")
-        & F.regexp_replace(F.col(ip_col), r"^\s+|\s+$", "").rlike("^[0-9A-Fa-f:.]+$")
+        & s.rlike("^[0-9A-Fa-f:.]+$")
         # '.' must have been consumed by the dotted-quad rewrite
         & ~F.col("__hexed").contains(".")
         & (F.size(F.col("__parts")) <= 2)
@@ -194,12 +217,48 @@ def with_ip_hilo(df: DataFrame, ip_col: str, out_col: str = "__ip_hilo") -> Data
     return out.withColumn(out_col, hilo).drop("__t", "__hexed", "__parts", "__lg", "__rg", "__g8")
 
 
+def _geo_extras(extra_cols: dict[str, str]) -> tuple[list[str], dict[str, str]]:
+    """Dim-side aliases of the extra GeoIP fields and their fact-side
+    fills ('' on a miss)."""
+    dim_side = [f"{_q(src)} AS {_q('__geo_x_' + src)}" for src in extra_cols]
+    fact_side = {dst: f"coalesce({_q('__geo_x_' + src)}, '')" for src, dst in extra_cols.items()}
+    return dim_side, fact_side
+
+
+def _v6_bucket_dim(geo_dim6: DataFrame, shift: int, extra_cols: dict[str, str]) -> DataFrame:
+    """The 128-bit dim under internal names, one row per top-of-hi
+    bucket each interval spans."""
+    return geo_dim6.selectExpr(
+        "start_hi AS __shi",
+        "start_lo AS __slo",
+        "end_hi AS __ehi",
+        "end_lo AS __elo",
+        "country AS __geo_country",
+        *_geo_extras(extra_cols)[0],
+        f"explode(sequence(shiftright(start_hi, {shift}), shiftright(end_hi, {shift})))"
+        " AS __geo_bkt",
+    )
+
+
+def _v6_join(df: DataFrame, dim: DataFrame, ip_col: str, out_col: str, shift: int,
+             extra_cols: dict[str, str]) -> DataFrame:
+    fact = with_ip_hilo(df, ip_col, "__hilo")
+    hit = (
+        f"shiftright(__hilo.hi, {shift}) = __geo_bkt"
+        " AND (__hilo.hi > __shi OR (__hilo.hi = __shi AND __hilo.lo >= __slo))"
+        " AND (__hilo.hi < __ehi OR (__hilo.hi = __ehi AND __hilo.lo <= __elo))"
+    )
+    joined = fact.join(F.broadcast(dim), F.expr(hit), "left")
+    fill = {out_col: "coalesce(__geo_country, 'Unknown')", **_geo_extras(extra_cols)[1]}
+    return joined.selectExpr(*_in_place(df.columns, fill))
+
+
 def geoip_enrich6(
     df: DataFrame,
     geo_dim6: DataFrame,
     ip_col: str = "source_ip_address",
     out_col: str = "source_country",
-    bucket_bits: int = 24,
+    bucket_bits: int = V6_BUCKET_BITS,
     extra_cols: dict[str, str] | None = None,
 ) -> DataFrame:
     """IPv6 counterpart of geoip_enrich: interval lookup against a
@@ -218,43 +277,34 @@ def geoip_enrich6(
     union in plans/enrichops.j3c_geoip6_range_join)."""
     shift = 64 - bucket_bits
     extra_cols = extra_cols or {}
-    fact = with_ip_hilo(df, ip_col, "__hilo").withColumn(
-        "__bkt", F.shiftright(F.col("__hilo.hi"), shift)
+    dim = _v6_bucket_dim(geo_dim6, shift, extra_cols)
+    return _v6_join(df, dim, ip_col, out_col, shift, extra_cols)
+
+
+def _v4_bucket_dim(geo_dim: DataFrame, shift: int, extra_cols: dict[str, str]) -> DataFrame:
+    """The (start_ip, end_ip, country, …) dim under internal names (so
+    an output column may share a dim column's name), one row per
+    bucket each interval spans."""
+    return geo_dim.selectExpr(
+        "start_ip AS __geo_lo",
+        "end_ip AS __geo_hi",
+        "country AS __geo_country",
+        *_geo_extras(extra_cols)[0],
+        f"explode(sequence(shiftright(start_ip, {shift}), shiftright(end_ip, {shift})))"
+        " AS __geo_bkt",
     )
-    dim = F.broadcast(
-        geo_dim6.select(
-            F.col("start_hi").alias("__shi"),
-            F.col("start_lo").alias("__slo"),
-            F.col("end_hi").alias("__ehi"),
-            F.col("end_lo").alias("__elo"),
-            F.col("country").alias("__geo_country"),
-            *[F.col(src).alias(f"__geo_x_{src}") for src in extra_cols],
-        ).withColumn(
-            "__bkt",
-            F.explode(
-                F.sequence(
-                    F.shiftright(F.col("__shi"), shift), F.shiftright(F.col("__ehi"), shift)
-                )
-            ),
-        )
+
+
+def _v4_join(df: DataFrame, dim: DataFrame, ip_col: str, out_col: str, shift: int,
+             extra_cols: dict[str, str]) -> DataFrame:
+    fact = df.selectExpr("*", f"{_ipv4_to_long_sql(ip_col)} AS __ip_long")
+    hit = (
+        f"shiftright(__ip_long, {shift}) = __geo_bkt"
+        " AND __ip_long >= __geo_lo AND __ip_long <= __geo_hi"
     )
-    hi, lo = F.col("__hilo.hi"), F.col("__hilo.lo")
-    ge_start = (hi > F.col("__shi")) | ((hi == F.col("__shi")) & (lo >= F.col("__slo")))
-    le_end = (hi < F.col("__ehi")) | ((hi == F.col("__ehi")) & (lo <= F.col("__elo")))
-    joined = fact.join(dim, (fact["__bkt"] == dim["__bkt"]) & ge_start & le_end, "left")
-    out = joined.withColumn(out_col, F.coalesce(F.col("__geo_country"), F.lit("Unknown")))
-    for src, dst in extra_cols.items():
-        out = out.withColumn(dst, F.coalesce(F.col(f"__geo_x_{src}"), F.lit("")))
-    return out.drop(
-        "__hilo",
-        "__bkt",
-        "__shi",
-        "__slo",
-        "__ehi",
-        "__elo",
-        "__geo_country",
-        *[f"__geo_x_{src}" for src in extra_cols],
-    )
+    joined = fact.join(F.broadcast(dim), F.expr(hit), "left")
+    fill = {out_col: "coalesce(__geo_country, 'Unknown')", **_geo_extras(extra_cols)[1]}
+    return joined.selectExpr(*_in_place(df.columns, fill))
 
 
 def geoip_enrich(
@@ -262,7 +312,7 @@ def geoip_enrich(
     geo_dim: DataFrame,
     ip_col: str = "source_ip_address",
     out_col: str = "source_country",
-    bucket_bits: int = 16,
+    bucket_bits: int = V4_BUCKET_BITS,
     extra_cols: dict[str, str] | None = None,
 ) -> DataFrame:
     """P9/J3 — prefix-interval lookup as a bucketed broadcast HASH join
@@ -287,44 +337,8 @@ def geoip_enrich(
     reads at utils.go:58-68); misses fill ''."""
     shift = 32 - bucket_bits
     extra_cols = extra_cols or {}
-    fact = df.withColumn("__ip_long", ipv4_to_long(F.col(ip_col))).withColumn(
-        "__ip_bkt", F.shiftright(F.col("__ip_long"), shift)
-    )
-    # internal names so out_col may legally collide with a dim column
-    dim = F.broadcast(
-        geo_dim.select(
-            F.col("start_ip").alias("__geo_lo"),
-            F.col("end_ip").alias("__geo_hi"),
-            F.col("country").alias("__geo_country"),
-            *[F.col(src).alias(f"__geo_x_{src}") for src in extra_cols],
-        ).withColumn(
-            "__ip_bkt",
-            F.explode(
-                F.sequence(
-                    F.shiftright(F.col("__geo_lo"), shift),
-                    F.shiftright(F.col("__geo_hi"), shift),
-                )
-            ),
-        )
-    )
-    joined = fact.join(
-        dim,
-        (fact["__ip_bkt"] == dim["__ip_bkt"])
-        & (F.col("__ip_long") >= dim["__geo_lo"])
-        & (F.col("__ip_long") <= dim["__geo_hi"]),
-        "left",
-    )
-    out = joined.withColumn(out_col, F.coalesce(F.col("__geo_country"), F.lit("Unknown")))
-    for src, dst in extra_cols.items():
-        out = out.withColumn(dst, F.coalesce(F.col(f"__geo_x_{src}"), F.lit("")))
-    return out.drop(
-        "__ip_long",
-        "__ip_bkt",
-        "__geo_lo",
-        "__geo_hi",
-        "__geo_country",
-        *[f"__geo_x_{src}" for src in extra_cols],
-    )
+    dim = _v4_bucket_dim(geo_dim, shift, extra_cols)
+    return _v4_join(df, dim, ip_col, out_col, shift, extra_cols)
 
 
 def apply_reverse_dns(
@@ -347,6 +361,22 @@ def apply_reverse_dns(
     )
 
 
+def _sender_dim(dns_map: DataFrame) -> DataFrame:
+    """The sender map keyed on its lower-cased base domain."""
+    return dns_map.selectExpr("lower(base_reverse_dns) AS __brd", "name AS __name",
+                              "type AS __type")
+
+
+def _sender_join(df: DataFrame, dim: DataFrame, reverse_dns_col: str) -> DataFrame:
+    fact = df.selectExpr("*", f"{_base_domain_sql(f'lower({reverse_dns_col})')} AS __bd")
+    joined = fact.join(F.broadcast(dim), F.expr("__bd = __brd"), "left")
+    return joined.selectExpr(*_in_place(df.columns, {
+        "source_base_domain": "__bd",
+        "source_name": "coalesce(__name, 'Unknown')",
+        "source_type": "coalesce(__type, 'Unknown')",
+    }))
+
+
 def classify_sender(
     df: DataFrame,
     dns_map: DataFrame,
@@ -356,27 +386,20 @@ def classify_sender(
     (base_reverse_dns, name, type), broadcast left join keyed on the
     base domain of the PTR hostname; misses → 'Unknown'
     (SURVEY J2; fields stored at clickhouse.go:116-117)."""
-    fact = df.withColumn("source_base_domain", base_domain(F.lower(F.col(reverse_dns_col))))
-    dim = F.broadcast(
-        dns_map.select(
-            F.lower(F.col("base_reverse_dns")).alias("__brd"),
-            F.col("name").alias("__name"),
-            F.col("type").alias("__type"),
-        )
-    )
-    joined = fact.join(dim, fact["source_base_domain"] == dim["__brd"], "left")
-    return (
-        joined.withColumn("source_name", F.coalesce(F.col("__name"), F.lit("Unknown")))
-        .withColumn("source_type", F.coalesce(F.col("__type"), F.lit("Unknown")))
-        .drop("__brd", "__name", "__type")
-    )
+    return _sender_join(df, _sender_dim(dns_map), reverse_dns_col)
 
 
 @dataclass
 class EnrichmentContext:
     """The dims + flags one daemon/CLI run enriches with, built once
     from config.parser (config.go:24-37 ParserConfig) and applied to
-    every batch. All dims are small broadcastable DataFrames."""
+    every batch. All dims are small broadcastable DataFrames.
+
+    The dims are prepared once, on first use: the bucket-exploded GeoIP
+    dims and the lower-cased sender map are persisted, and every later
+    `enrich_records` call reads them instead of re-reading and
+    re-exploding their sources. `release()` frees them; a later use
+    prepares them again."""
 
     geo_dim: DataFrame | None = None
     geo_dim6: DataFrame | None = None  # 128-bit dim when the mmdb is a v6 tree
@@ -384,6 +407,28 @@ class EnrichmentContext:
     nameservers: list[str] = field(default_factory=list)
     dns_timeout: float = 2.0
     offline: bool = True
+    _prepared: tuple | None = field(default=None, init=False, repr=False, compare=False)
+
+    def prepared(self) -> tuple[DataFrame | None, DataFrame | None, DataFrame | None]:
+        """(v4 GeoIP, v6 GeoIP, sender map) in join form, persisted;
+        None where the context has no such dim."""
+        if self._prepared is None:
+            self._prepared = tuple(
+                None if src is None else prep(src).persist()
+                for src, prep in (
+                    (self.geo_dim, lambda d: _v4_bucket_dim(d, 32 - V4_BUCKET_BITS, {})),
+                    (self.geo_dim6, lambda d: _v6_bucket_dim(d, 64 - V6_BUCKET_BITS, {})),
+                    (self.dns_map, _sender_dim),
+                )
+            )
+        return self._prepared
+
+    def release(self) -> None:
+        """Unpersist the prepared dims."""
+        for df in self._prepared or ():
+            if df is not None:
+                df.unpersist()
+        self._prepared = None
 
 
 def build_enrichment(spark: SparkSession, parser_cfg) -> EnrichmentContext | None:
@@ -422,20 +467,24 @@ def enrich_records(
     df: DataFrame, ctx: EnrichmentContext, ip_col: str = "source_ip_address"
 ) -> DataFrame:
     """Apply the configured enrichments to a flat table that carries the
-    source_* columns (aggregate records / forensic reports). Column
-    order is preserved — every enrichment replaces an existing offline
-    default in place (parser.go:1274-1296)."""
+    source_* columns (aggregate records / forensic reports), joining
+    the context's prepared dims. Column order is preserved — every
+    enrichment replaces an existing offline default in place
+    (parser.go:1274-1296)."""
+    geo, geo6, senders = ctx.prepared()
     out = df
-    if ctx.geo_dim is not None and ctx.geo_dim6 is not None:
+    if geo is not None and geo6 is not None:
         # dual-stack route: each family through its own bucketed join —
         # a unified 128-bit join would funnel every v4 row into the
         # single hi=0 bucket and degrade to a linear dim scan per row
-        is6 = F.coalesce(F.col(ip_col).contains(":"), F.lit(False))
-        out = geoip_enrich(out.filter(~is6), ctx.geo_dim, ip_col=ip_col).unionByName(
-            geoip_enrich6(out.filter(is6), ctx.geo_dim6, ip_col=ip_col)
+        is6 = f"coalesce(contains({ip_col}, ':'), false)"
+        out = _v4_join(
+            out.filter(f"NOT {is6}"), geo, ip_col, "source_country", 32 - V4_BUCKET_BITS, {}
+        ).unionByName(
+            _v6_join(out.filter(is6), geo6, ip_col, "source_country", 64 - V6_BUCKET_BITS, {})
         )
-    elif ctx.geo_dim is not None:
-        out = geoip_enrich(out, ctx.geo_dim, ip_col=ip_col)
+    elif geo is not None:
+        out = _v4_join(out, geo, ip_col, "source_country", 32 - V4_BUCKET_BITS, {})
     if not ctx.offline and ctx.nameservers:
         from parsedmarc_go_spark.functions.enrichdims import resolve_ptr_batch
 
@@ -446,6 +495,6 @@ def enrich_records(
             offline=False,
         )
         out = apply_reverse_dns(out, rdns, ip_col=ip_col)
-    if ctx.dns_map is not None:
-        out = classify_sender(out, ctx.dns_map)
+    if senders is not None:
+        out = _sender_join(out, senders, "source_reverse_dns")
     return out

@@ -415,7 +415,7 @@ def geo_dim_from_csv(
     from parsedmarc_go_spark.functions.enrich import ipv4_to_long
 
     net = F.split(F.col("network"), "/")
-    base = ipv4_to_long(F.element_at(net, 1))
+    base = ipv4_to_long("element_at(split(network, '/'), 1)")
     plen = F.element_at(net, 2).cast("int")
     with_range = (
         blocks.select(

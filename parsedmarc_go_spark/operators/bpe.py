@@ -367,7 +367,11 @@ def maxmunch_encode(
     # max_piece_len. Contract: probe_lengths must cover every piece
     # length ≤ max_piece_len present in the vocab — lengths absent
     # from the vocab are free to omit because their element_at probe
-    # is NULL on every word position by construction.
+    # is NULL on every word position by construction. A vocab piece
+    # whose length the list misses fails the map aggregate itself
+    # (raise_error inside `__vm`): no extra job, and no projection can
+    # prune the check away from the map the DP reads.
+    vm = "map_from_entries(collect_list(struct(token, 1)))"
     if probe_lengths is None:
         lens = list(range(max_piece_len, 0, -1))
     else:
@@ -376,11 +380,16 @@ def maxmunch_encode(
             raise ValueError(
                 f"probe_lengths must lie in [1, {max_piece_len}], got {probe_lengths!r}"
             )
-    vocab_map = vocab.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("token"), F.lit(1)))
-        ).alias("__vm")
-    )
+        missed = (
+            f"length(token) <= {max_piece_len}"
+            f" AND length(token) NOT IN ({', '.join(map(str, lens))})"
+        )
+        vm = (
+            f"CASE WHEN bool_or({missed}) THEN raise_error(concat("
+            f"'probe_lengths {sorted(lens)} miss the length of vocab piece ',"
+            f" max_by(token, {missed}))) ELSE {vm} END"
+        )
+    vocab_map = vocab.agg(F.expr(vm).alias("__vm"))
     # the _shingle_stream parallelism guard (operators/dedup.py:64):
     # the occurrence join + per-doc re-assembly downstream inherit THIS
     # frame's partitioning, and a small parquet scan (one sf1 file → 2

@@ -938,7 +938,12 @@ def neardup_clusters_bigstar(
     weight is monotonically non-increasing, and the fixpoint is a set
     of stars rooted at component minima, read off as the label table.
     Per-round lineage is cut with localCheckpoint like the sibling
-    (see its docstring for the checkpoint-vs-persist rationale)."""
+    (see its docstring for the checkpoint-vs-persist rationale).
+
+    Not fully lazy: the call checkpoints the edge set and runs one
+    limit-1 job to test it for emptiness before building any round, so
+    an empty pair set costs that job and zero rounds (`stats["rounds"]`
+    is 0, the same keys the loop sets)."""
     edges = (
         pairs.select(
             F.least("doc_a", "doc_b").alias("a"), F.greatest("doc_a", "doc_b").alias("b")
@@ -956,14 +961,12 @@ def neardup_clusters_bigstar(
     # two joins, a distinct, a checkpoint, a convergence collect — all
     # over nothing) before noticing. Semantics are exact: no edges ⇒
     # no labeled docs (singletons are never emitted, per the contract).
-    if edges.isEmpty():
-        if stats is not None:
-            stats["rounds"] = 0
-        return edges.select(
-            F.col("a").alias("doc"), F.col("b").alias("cluster_id")
-        )
+    # The empty graph runs zero rounds and leaves through the same
+    # stats write and return as every other graph.
+    if stats is not None:
+        stats["rounds"] = 0
     prev = None
-    for rounds in range(1, max_iterations + 1):
+    for rounds in range(1, 0 if edges.isEmpty() else max_iterations + 1):
         if stats is not None:
             stats["rounds"] = rounds
         sym = edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))

@@ -51,7 +51,7 @@ _HOST_EXPR = """
 )
 def p11_base_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").withColumn("host", F.expr(_HOST_EXPR))
-    return docs.select("doc_id", "host", base_domain(F.col("host")).alias("base_dom"))
+    return docs.select("doc_id", "host", base_domain("host").alias("base_dom"))
 
 
 # deterministic fake IPv4/garbage per event (valid and invalid paths)
@@ -92,7 +92,7 @@ def f4_ip_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 — utils.go:148-150 IsValidIPAddress, via the int64 conversion
     the GeoIP join uses (IPv4 subset; IPv6 returns NULL/invalid)."""
     ev = load(spark, sf_dir, "events").withColumn("ip", F.expr(_IP_EXPR))
-    ip_long = ipv4_to_long(F.col("ip"))
+    ip_long = ipv4_to_long("ip")
     return ev.select("event_id", "ip", ip_long.alias("ip_long"), ip_long.isNotNull().alias("is_valid"))
 
 

@@ -20,12 +20,13 @@ from pyspark.sql import functions as F
 
 from parsedmarc_go_spark.caching import release_intermediates, scoped_persist
 from parsedmarc_go_spark.functions.normalize import (
+    AGGREGATE_REJECT_REASON,
+    AGGREGATE_VALID,
+    INGEST_TS,
+    STRIP_TO_FEEDBACK,
     aggregate_records_flat,
     aggregate_reports_flat,
-    aggregate_validity,
-    has_bad_record_count,
     ingest_ts,
-    strip_to_feedback,
 )
 from parsedmarc_go_spark.schemas import (
     AGGREGATE_FEEDBACK_SCHEMA,
@@ -46,22 +47,20 @@ def read_report_files(spark: SparkSession, path: str, glob: str | None = None) -
     return reader.load(path).select("path", "length", "content")
 
 
+# the extraction struct of a file over the F3 size cap, which is never extracted
+_OVERSIZED = (
+    "named_struct('kind', 'error', 'payload', CAST(NULL AS STRING),"
+    " 'container', CAST(NULL AS STRING), 'forensic_json', CAST(NULL AS STRING),"
+    " 'error', 'report exceeds 100 MB cap')"
+)
+
+
 def extract_reports(files: DataFrame) -> DataFrame:
     """Run the extraction cascade once per file; keep only (path, x)."""
-    guarded = files.withColumn(
-        "x",
-        F.when(
-            F.col("length") > MAX_FILE_BYTES,
-            F.struct(
-                F.lit("error").alias("kind"),
-                F.lit(None).cast("string").alias("payload"),
-                F.lit(None).cast("string").alias("container"),
-                F.lit(None).cast("string").alias("forensic_json"),
-                F.lit("report exceeds 100 MB cap").alias("error"),
-            ),
-        ).otherwise(extract_udf(F.col("content"))),
+    x = F.when(F.expr(f"length > {MAX_FILE_BYTES}"), F.expr(_OVERSIZED)).otherwise(
+        extract_udf(F.col("content"))
     )
-    return guarded.select("path", "x.*")
+    return files.select("path", x.alias("x")).select("path", "x.*")
 
 
 @dataclass
@@ -77,10 +76,10 @@ class IngestResult:
 def parse_feedback(extracted: DataFrame) -> DataFrame:
     """S6, first half: wrapper strip → from_xml (PERMISSIVE, corrupt
     column) over the aggregate rows, giving (path, fb)."""
-    return extracted.filter(F.col("kind") == "aggregate").select(
+    return extracted.filter("kind = 'aggregate'").select(
         "path",
         F.from_xml(
-            strip_to_feedback(F.col("payload")),
+            F.expr(STRIP_TO_FEEDBACK),
             AGGREGATE_FEEDBACK_SCHEMA,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ).alias("fb"),
@@ -92,21 +91,9 @@ def aggregate_tables(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """S6, second half: validity gate (F1/F2) over `parse_feedback`'s
     (path, fb) → parent and fact projections plus the rejects."""
-    fb = F.col("fb")
-    ok = parsed.filter(aggregate_validity(fb))
-    bad = parsed.filter(~aggregate_validity(fb)).select(
-        "path",
-        F.lit("aggregate").alias("kind"),
-        F.coalesce(
-            F.when(F.col("fb._corrupt_record").isNotNull(), "xml parse failed"),
-            F.when(
-                F.col("fb.report_metadata.date_range.begin").try_cast("long").isNull()
-                | F.col("fb.report_metadata.date_range.end").try_cast("long").isNull(),
-                "invalid date range",
-            ),
-            F.when(has_bad_record_count(fb), "invalid record count"),
-            F.lit("time span > 24 hours - RFC 7489 section 7.2"),
-        ).alias("error"),
+    ok = parsed.filter(AGGREGATE_VALID)
+    bad = parsed.filter(f"NOT ({AGGREGATE_VALID})").selectExpr(
+        "path", "'aggregate' AS kind", f"{AGGREGATE_REJECT_REASON} AS error"
     )
     return (
         aggregate_reports_flat(ok, as_of=as_of),
@@ -123,47 +110,99 @@ def parse_aggregate(
     return aggregate_tables(parse_feedback(extracted), as_of)
 
 
+# flat forensic table (clickhouse.go:145-176) over the typed struct's
+# fields, with the offline enrichment defaults of parser.go:1274-1296
+_ARRIVAL = f"coalesce(try_to_timestamp(arrival_date), {INGEST_TS})"
+FORENSIC_COLUMNS = (
+    "coalesce(feedback_type, 'auth-failure') AS feedback_type",
+    "user_agent",
+    "version",
+    "original_envelope_id",
+    "original_mail_from",
+    "original_rcpt_to",
+    f"{_ARRIVAL} AS arrival_date",
+    f"{_ARRIVAL} AS arrival_date_utc",
+    "coalesce(subject, '') AS subject",
+    "coalesce(message_id, '') AS message_id",
+    "coalesce(authentication_results, '') AS authentication_results",
+    "dkim_domain",
+    "coalesce(source_ip_address, '') AS source_ip_address",
+    "'Unknown' AS source_country",
+    "'' AS source_reverse_dns",
+    "'' AS source_base_domain",
+    "'' AS source_name",
+    "'Unknown' AS source_type",
+    "coalesce(delivery_result, 'other') AS delivery_result",
+    "coalesce(auth_failure, array('dmarc')) AS auth_failure",
+    "coalesce(reported_domain, '') AS reported_domain",
+    "coalesce(authentication_mechanisms, array()) AS authentication_mechanisms",
+    "coalesce(sample_headers_only, false) AS sample_headers_only",
+    "coalesce(sample, '') AS sample",
+    "coalesce(parsed_sample, '') AS parsed_sample",
+    f"{INGEST_TS} AS created_at",
+)
+
+
 def parse_forensic(extracted: DataFrame, as_of: str | None = None) -> DataFrame:
     """S10/S13 output typing: the extraction UDF already parsed the MIME
     and the RFC 6591 key-value block; type the struct and project the
-    flat table (clickhouse.go:145-176). Offline enrichment defaults as
-    in parser.go:1274-1296."""
-    fr = (
-        extracted.filter(F.col("kind") == "forensic")
-        .select("path", F.from_json("forensic_json", FORENSIC_JSON_SCHEMA).alias("r"))
-        .select("path", "r.*")
+    flat table."""
+    return (
+        extracted.filter("kind = 'forensic'")
+        .select(
+            F.from_json("forensic_json", FORENSIC_JSON_SCHEMA).alias("r"),
+            ingest_ts(as_of).alias(INGEST_TS),
+        )
+        .select("r.*", INGEST_TS)
+        .selectExpr(*FORENSIC_COLUMNS)
     )
-    arrival = F.coalesce(F.try_to_timestamp(F.col("arrival_date")), ingest_ts(as_of))
-    return fr.select(
-        F.coalesce(F.col("feedback_type"), F.lit("auth-failure")).alias("feedback_type"),
-        "user_agent",
-        "version",
-        "original_envelope_id",
-        "original_mail_from",
-        "original_rcpt_to",
-        arrival.alias("arrival_date"),
-        arrival.alias("arrival_date_utc"),
-        F.coalesce(F.col("subject"), F.lit("")).alias("subject"),
-        F.coalesce(F.col("message_id"), F.lit("")).alias("message_id"),
-        F.coalesce(F.col("authentication_results"), F.lit("")).alias("authentication_results"),
-        "dkim_domain",
-        F.coalesce(F.col("source_ip_address"), F.lit("")).alias("source_ip_address"),
-        F.lit("Unknown").alias("source_country"),
-        F.lit("").alias("source_reverse_dns"),
-        F.lit("").alias("source_base_domain"),
-        F.lit("").alias("source_name"),
-        F.lit("Unknown").alias("source_type"),
-        F.coalesce(F.col("delivery_result"), F.lit("other")).alias("delivery_result"),
-        F.coalesce(F.col("auth_failure"), F.array(F.lit("dmarc"))).alias("auth_failure"),
-        F.coalesce(F.col("reported_domain"), F.lit("")).alias("reported_domain"),
-        F.coalesce(F.col("authentication_mechanisms"), F.array()).alias(
-            "authentication_mechanisms"
-        ),
-        F.coalesce(F.col("sample_headers_only"), F.lit(False)).alias("sample_headers_only"),
-        F.coalesce(F.col("sample"), F.lit("")).alias("sample"),
-        F.coalesce(F.col("parsed_sample"), F.lit("")).alias("parsed_sample"),
-        ingest_ts(as_of).alias("created_at"),
-    )
+
+
+# RFC 8460 report → one row per policy (explode_outer keeps a report
+# without policies), its failure details kept as `pol` for the second table
+_TLS_POLICIES = (
+    "coalesce(r.`organization-name`, '') AS organization_name",
+    "try_to_timestamp(r.`date-range`.`start-datetime`) AS begin_date",
+    "try_to_timestamp(r.`date-range`.`end-datetime`) AS end_date",
+    "coalesce(r.`contact-info`, '') AS contact_info",
+    "coalesce(r.`report-id`, '') AS report_id",
+    "explode_outer(r.policies) AS pol",
+    INGEST_TS,
+)
+_POLICY_DOMAIN = "coalesce(pol.policy.`policy-domain`, '') AS policy_domain"
+SMTP_TLS_REPORT_COLUMNS = (
+    "organization_name",
+    "begin_date",
+    "end_date",
+    "contact_info",
+    "report_id",
+    _POLICY_DOMAIN,
+    "coalesce(pol.policy.`policy-type`, '') AS policy_type",
+    "coalesce(pol.policy.`policy-string`, array()) AS policy_strings",
+    "coalesce(pol.policy.`mx-host-pattern`, array()) AS mx_host_patterns",
+    "coalesce(pol.summary.`total-successful-session-count`, 0) AS successful_session_count",
+    "coalesce(pol.summary.`total-failure-session-count`, 0) AS failed_session_count",
+    f"{INGEST_TS} AS created_at",
+)
+_TLS_FAILURE_EXPLODE = (
+    "report_id",
+    _POLICY_DOMAIN,
+    "explode(coalesce(pol.`failure-details`, array())) AS fd",
+    INGEST_TS,
+)
+SMTP_TLS_FAILURE_COLUMNS = (
+    "report_id",
+    "policy_domain",
+    "coalesce(fd.`result-type`, '') AS result_type",
+    "coalesce(fd.`failed-session-count`, 0) AS failed_session_count",
+    "fd.`sending-mta-ip` AS sending_mta_ip",
+    "fd.`receiving-ip` AS receiving_ip",
+    "fd.`receiving-mx-hostname` AS receiving_mx_hostname",
+    "fd.`receiving-mx-helo` AS receiving_mx_helo",
+    "fd.`additional-information` AS additional_info_uri",
+    "fd.`failure-reason-code` AS failure_reason_code",
+    f"{INGEST_TS} AS created_at",
+)
 
 
 def parse_smtp_tls(
@@ -172,65 +211,21 @@ def parse_smtp_tls(
     """S7: RFC 8460 JSON (hyphenated wire keys) → reports + failure
     details tables (clickhouse.go:183-228, 415-497). One report row per
     policy (explode), one failure row per failure detail."""
-    tls = extracted.filter(F.col("kind") == "smtp_tls").select(
+    tls = extracted.filter("kind = 'smtp_tls'").select(
         "path",
         F.from_json(
             "payload",
             SMTP_TLS_JSON_SCHEMA,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ).alias("r"),
+        ingest_ts(as_of).alias(INGEST_TS),
     )
-    ok = tls.filter(F.col("r._corrupt_record").isNull() & F.col("r").isNotNull())
-    bad = tls.filter(F.col("r._corrupt_record").isNotNull() | F.col("r").isNull()).select(
-        "path", F.lit("smtp_tls").alias("kind"), F.lit("json parse failed").alias("error")
+    pol = tls.filter("r._corrupt_record IS NULL AND r IS NOT NULL").selectExpr(*_TLS_POLICIES)
+    bad = tls.filter("r._corrupt_record IS NOT NULL OR r IS NULL").selectExpr(
+        "path", "'smtp_tls' AS kind", "'json parse failed' AS error"
     )
-
-    pol = ok.select(
-        F.coalesce(F.col("r.`organization-name`"), F.lit("")).alias("organization_name"),
-        F.try_to_timestamp(F.col("r.`date-range`.`start-datetime`")).alias("begin_date"),
-        F.try_to_timestamp(F.col("r.`date-range`.`end-datetime`")).alias("end_date"),
-        F.coalesce(F.col("r.`contact-info`"), F.lit("")).alias("contact_info"),
-        F.coalesce(F.col("r.`report-id`"), F.lit("")).alias("report_id"),
-        F.explode_outer(F.col("r.policies")).alias("pol"),
-    )
-    reports = pol.select(
-        "organization_name",
-        "begin_date",
-        "end_date",
-        "contact_info",
-        "report_id",
-        F.coalesce(F.col("pol.policy.`policy-domain`"), F.lit("")).alias("policy_domain"),
-        F.coalesce(F.col("pol.policy.`policy-type`"), F.lit("")).alias("policy_type"),
-        F.coalesce(F.col("pol.policy.`policy-string`"), F.array()).alias("policy_strings"),
-        F.coalesce(F.col("pol.policy.`mx-host-pattern`"), F.array()).alias("mx_host_patterns"),
-        F.coalesce(F.col("pol.summary.`total-successful-session-count`"), F.lit(0)).alias(
-            "successful_session_count"
-        ),
-        F.coalesce(F.col("pol.summary.`total-failure-session-count`"), F.lit(0)).alias(
-            "failed_session_count"
-        ),
-        ingest_ts(as_of).alias("created_at"),
-    )
-    failures = (
-        pol.select(
-            "report_id",
-            F.coalesce(F.col("pol.policy.`policy-domain`"), F.lit("")).alias("policy_domain"),
-            F.explode(F.coalesce(F.col("pol.`failure-details`"), F.array())).alias("fd"),
-        )
-        .select(
-            "report_id",
-            "policy_domain",
-            F.coalesce(F.col("fd.`result-type`"), F.lit("")).alias("result_type"),
-            F.coalesce(F.col("fd.`failed-session-count`"), F.lit(0)).alias("failed_session_count"),
-            F.col("fd.`sending-mta-ip`").alias("sending_mta_ip"),
-            F.col("fd.`receiving-ip`").alias("receiving_ip"),
-            F.col("fd.`receiving-mx-hostname`").alias("receiving_mx_hostname"),
-            F.col("fd.`receiving-mx-helo`").alias("receiving_mx_helo"),
-            F.col("fd.`additional-information`").alias("additional_info_uri"),
-            F.col("fd.`failure-reason-code`").alias("failure_reason_code"),
-            ingest_ts(as_of).alias("created_at"),
-        )
-    )
+    reports = pol.selectExpr(*SMTP_TLS_REPORT_COLUMNS)
+    failures = pol.selectExpr(*_TLS_FAILURE_EXPLODE).selectExpr(*SMTP_TLS_FAILURE_COLUMNS)
     return reports, failures, bad
 
 
@@ -271,8 +266,8 @@ def ingest_files(files: DataFrame, as_of: str | None = None) -> IngestResult:
     agg_reports, agg_records, agg_bad = aggregate_tables(feedback, as_of)
     forensic = parse_forensic(extracted, as_of)
     tls_reports, tls_failures, tls_bad = parse_smtp_tls(extracted, as_of)
-    hard_errors = extracted.filter(F.col("kind") == "error").select(
-        "path", F.lit("unknown").alias("kind"), "error"
+    hard_errors = extracted.filter("kind = 'error'").selectExpr(
+        "path", "'unknown' AS kind", "error"
     )
     rejects = hard_errors.unionByName(agg_bad).unionByName(tls_bad)
     return IngestResult(

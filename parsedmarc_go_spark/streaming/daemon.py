@@ -18,6 +18,17 @@ table as ceil(batch bytes / maxPartitionBytes) files. The batch's byte
 count and the metrics counters are Observations on those same actions,
 so counting costs no job of its own.
 
+The fill runs at one task per core: before extraction the batch is
+coalesced to max(defaultParallelism, ceil(batch bytes /
+maxPartitionBytes)) partitions, the rule the table writes use. The
+per-task memory bound follows from it. A batch of small files puts
+ceil(files / cores) files in each task, and the extraction UDF gets
+them in one Arrow batch (up to `spark.sql.execution.arrow.
+maxRecordsPerBatch` files), so a task holds those files' bytes and
+their extracted payloads at once. A batch of large files keeps one
+task per maxPartitionBytes of input. The enrichment dims are prepared
+once per `EnrichmentContext` and read from the cache by every batch.
+
 End-to-end exactly-once: the checkpointed file source replays a failed
 micro-batch with the SAME batch_id, and every table write is an
 idempotent dynamic-partition OVERWRITE of that batch's own
@@ -46,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from parsedmarc_go_spark import caching
+from parsedmarc_go_spark.functions.normalize import check_as_of
 from parsedmarc_go_spark.metrics import (
     escape_label_value,
     observed_ingest,
@@ -102,6 +114,18 @@ def _write_tables(spark: SparkSession, frames: dict[str, DataFrame], out_dir: st
         f.result()
 
 
+def _partitions_for(spark: SparkSession, n_bytes: int) -> int:
+    """ceil(n_bytes / spark.sql.files.maxPartitionBytes)."""
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return math.ceil(n_bytes / max_bytes)
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of `df`, with no job: for a file
+    batch, its files' bytes scaled by the projected row width."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def make_batch_processor(
     out_dir: str,
     enrichment=None,
@@ -129,8 +153,11 @@ def make_batch_processor(
     by batch_id, so the crash-and-replay case the table writes are
     designed for is idempotent in the counters too: re-running batch N
     overwrites N's contribution instead of double-counting (round-4
-    advice)."""
+    advice).
 
+    A malformed `as_of` raises ValueError here, before any job."""
+    if as_of is not None:
+        check_as_of(as_of)
     batch_contribs: dict[int, Counter] = {}
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
@@ -140,7 +167,11 @@ def make_batch_processor(
         # the scope releases the batch's cached intermediates on every
         # way out, a failed table write included
         with caching.scope() as cached:
-            batch, batch_obs = observed_ingest(batch)
+            # one extraction task per core, or per maxPartitionBytes of
+            # a larger batch, from the plan's size estimate
+            n_fill = max(spark.sparkContext.defaultParallelism,
+                         _partitions_for(spark, _estimated_bytes(batch)))
+            batch, batch_obs = observed_ingest(batch.coalesce(n_fill))
             # `as_of` pins the ingest clock: with it set, a crash-and-
             # replay of batch N rewrites byte-identical files (created_at
             # included) instead of merely row-equivalent ones
@@ -165,8 +196,7 @@ def make_batch_processor(
                     written[name] = Observation(f"{name}_written")
                     frames[name] = frames[name].observe(written[name], agg.alias("v"))
             # one file per table per maxPartitionBytes of input
-            max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-            n_files = max(1, math.ceil((batch_obs.get["bytes"] or 0) / max_bytes))
+            n_files = max(1, _partitions_for(spark, batch_obs.get["bytes"] or 0))
             # idempotent commit: a replay of batch N replaces batch N's
             # files and touches nothing else (see _write_table)
             _write_tables(spark, {n: df.coalesce(n_files) for n, df in frames.items()},
@@ -217,7 +247,10 @@ def stream_ingest(
     `__batch_id` partition (see `make_batch_processor`).
     `metrics_path` (optional) publishes the cumulative counters taken
     from those writes; `as_of` (optional) pins the ingest clock — see
-    normalize.ingest_ts."""
+    normalize.ingest_ts — and a malformed one raises ValueError before
+    the query starts."""
+    # built first: a malformed as_of raises before the source is read
+    process = make_batch_processor(out_dir, enrichment, metrics_path, as_of)
     files = (
         spark.readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
@@ -227,9 +260,9 @@ def stream_ingest(
         .select("path", "length", "content")
     )
 
-    writer = files.writeStream.foreachBatch(
-        make_batch_processor(out_dir, enrichment, metrics_path, as_of)
-    ).option("checkpointLocation", checkpoint_dir)
+    writer = files.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif trigger_seconds:

@@ -250,3 +250,18 @@ def test_maxmunch_unk_token_validation_and_count(spark):
     }
     assert got[1] == (["[unk]", "ok"], 0)
     assert got[2] == (["[unk]", "ok"], 1)
+
+
+def test_maxmunch_incomplete_probe_lengths_fail_the_encode(spark):
+    """probe_lengths that miss the length of a vocab piece (here 3, for
+    'cat') would make that piece unreachable; the encode fails instead
+    of silently splitting 'cat' into shorter pieces. A list that covers
+    every length encodes as without it."""
+    from parsedmarc_go_spark.operators.bpe import maxmunch_encode
+
+    docs = spark.createDataFrame([(1, "cat at")], ["doc_id", "text"])
+    vocab = spark.createDataFrame([("cat",), ("at",), ("c",), ("a",), ("t",)], ["token"])
+    with pytest.raises(Exception, match="probe_lengths .* miss the length of vocab piece cat"):
+        maxmunch_encode(docs, vocab, max_piece_len=3, probe_lengths=[1, 2]).collect()
+    got = maxmunch_encode(docs, vocab, max_piece_len=3, probe_lengths=[1, 2, 3]).collect()
+    assert [list(r["pieces"]) for r in got] == [["cat", "at"]]

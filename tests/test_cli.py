@@ -36,6 +36,20 @@ def test_flag_surface_matches_reference():
     assert (ns.input, ns.output, ns.format, ns.config) == ("a", "b", "csv", "c")
 
 
+def test_malformed_as_of_is_a_usage_error(tmp_path, capsys):
+    """A malformed -as-of stops the CLI at argument parsing, naming the
+    expected form, instead of failing inside the first Spark job."""
+    for bad in ("garbage", "2024-13-01 00:00:00", "2024-01-15 25:00:00", "15/01/2024"):
+        with pytest.raises(SystemExit) as exit_info:
+            main(["-input", str(tmp_path), "-as-of", bad,
+                  "-config", str(tmp_path / "absent.yaml")])
+        assert exit_info.value.code == 2
+        err = capsys.readouterr().err
+        assert "-as-of" in err and "yyyy-MM-dd HH:mm:ss" in err and repr(bad) in err, err
+    for good in ("2024-01-15 00:00:00", "2024-01-15", "2024-01-15T00:00:00.5Z", ""):
+        assert build_arg_parser().parse_args(["-as-of", good]).as_of == good
+
+
 def test_invalid_format_fails(spark, tmp_path, capsys):
     # `spark` fixture first: the CLI's getOrCreate must reuse the tuned
     # test session, not create a default-heap one for the whole suite

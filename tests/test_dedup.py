@@ -231,6 +231,21 @@ def test_bigstar_clusters_chain_in_log_rounds(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_bigstar_empty_graph_sets_the_loop_stats_keys(spark):
+    """An empty pair set runs zero rounds and reports the same stats
+    keys as a graph that runs the loop."""
+    from parsedmarc_go_spark.operators.dedup import neardup_clusters_bigstar
+
+    schema = "doc_a long, doc_b long"
+    empty_stats: dict = {}
+    got = neardup_clusters_bigstar(spark.createDataFrame([], schema), stats=empty_stats)
+    assert got.collect() == [] and got.columns == ["doc", "cluster_id"]
+    stats: dict = {}
+    neardup_clusters_bigstar(spark.createDataFrame([(1, 2)], schema), stats=stats)
+    assert empty_stats == {"rounds": 0}
+    assert empty_stats.keys() == stats.keys() and stats["rounds"] >= 1
+
+
 @pytest.mark.slow  # >10 s wall: excluded from the default lane (run -m "")
 def test_bigstar_agrees_with_min_label_on_random_graphs(spark):
     """Equality pin between the O(log n)-round and O(diameter)-round

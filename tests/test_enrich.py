@@ -27,7 +27,7 @@ def test_base_domain_rules(spark):
         ("deep.sub.mail.example.org", "example.org"),
     ]
     df = spark.createDataFrame([(c,) for c, _ in cases], "host string")
-    got = {r.host: r.bd for r in df.select("host", base_domain(F.col("host")).alias("bd")).collect()}
+    got = {r.host: r.bd for r in df.select("host", base_domain("host").alias("bd")).collect()}
     for host, expected in cases:
         assert got[host] == expected, f"{host}: {got[host]} != {expected}"
 
@@ -37,7 +37,7 @@ def test_ipv4_to_long(spark):
         [("0.0.0.0",), ("255.255.255.255",), ("10.0.0.1",), ("::1",), ("999.1.1.1",), ("x",)],
         "ip string",
     )
-    got = {r.ip: r.v for r in df.select("ip", ipv4_to_long(F.col("ip")).alias("v")).collect()}
+    got = {r.ip: r.v for r in df.select("ip", ipv4_to_long("ip").alias("v")).collect()}
     assert got["0.0.0.0"] == 0
     assert got["255.255.255.255"] == 4294967295
     assert got["10.0.0.1"] == 167772161

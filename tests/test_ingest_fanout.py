@@ -90,10 +90,10 @@ def _sql_executions(spark) -> list:
     return _seq(spark._jsparkSession.sharedState().statusStore().executionsList())
 
 
-def _binary_files_read(spark, after_exec: int) -> int:
-    """Σ 'number of files read' over the binaryFile scan nodes of the
-    SQL executions after `after_exec`. A cached read does not count:
-    the metric is posted once, when the scan lists its files."""
+def _files_read(spark, after_exec: int, scan: str = "binaryFile") -> int:
+    """Σ 'number of files read' over the `Scan <scan>` nodes of the SQL
+    executions after `after_exec`. A cached read does not count: the
+    metric is posted once, when the scan lists its files."""
     store = spark._jsparkSession.sharedState().statusStore()
     total = 0
     for e in _sql_executions(spark):
@@ -101,7 +101,7 @@ def _binary_files_read(spark, after_exec: int) -> int:
             continue
         values = store.executionMetrics(e.executionId())
         for node in _seq(store.planGraph(e.executionId()).allNodes()):
-            if not node.name().startswith("Scan binaryFile"):
+            if not node.name().startswith(f"Scan {scan}"):
                 continue
             for m in _seq(node.metrics()):
                 v = values.get(m.accumulatorId())
@@ -162,7 +162,7 @@ def test_one_shot_reads_each_file_once(spark, report_tree, tmp_path, capsys):
     assert len(err) == 1 and err[0].endswith("/bad.xml: xml parse failed"), err
 
     # six collects, one scan: every later output read the cached frames
-    assert _binary_files_read(spark, last_exec) == N_FILES
+    assert _files_read(spark, last_exec) == N_FILES
     assert _cache_is_empty(spark), "the one-shot left a cached plan behind"
 
 
@@ -342,3 +342,109 @@ def test_batch_processor_counters_survive_replay(spark, report_tree, tmp_path):
     proc(batch, 1)
     assert _prom_counters(open(mpath).read()) == {k: 2 * v for k, v in first.items()}
     assert _prom_counters(open(mpath).read()) == _table_counters(spark, out)
+
+
+def test_malformed_as_of_raises_before_any_job(spark, tmp_path):
+    """ingest_ts and stream_ingest reject a malformed as_of with a
+    ValueError naming the expected form; no query starts."""
+    from parsedmarc_go_spark.functions.normalize import ingest_ts
+    from parsedmarc_go_spark.streaming.daemon import stream_ingest
+
+    for bad in ("garbage", "2024-02-30 00:00:00", "2024-01-15 00:00:00; DROP"):
+        with pytest.raises(ValueError, match="yyyy-MM-dd HH:mm:ss"):
+            ingest_ts(bad)
+        with pytest.raises(ValueError, match="yyyy-MM-dd HH:mm:ss"):
+            stream_ingest(spark, str(tmp_path / "landing"), str(tmp_path / "out"),
+                          str(tmp_path / "ckpt"), available_now=True, as_of=bad)
+    assert not spark.streams.active
+    assert spark.range(1).select(ingest_ts(AS_OF).cast("string")).first()[0] == AS_OF
+
+
+@pytest.fixture(scope="module")
+def enriched_batches(tmp_path_factory) -> tuple[str, str, list[str]]:
+    """GeoLite2-format CSVs and two 40-file mixed batches from the
+    benchmark's generator: (blocks csv, locations csv, batch dirs)."""
+    gen = _generator()
+    rng = random.Random(23)
+    geo = gen.make_geo(rng)
+    d = tmp_path_factory.mktemp("enriched")
+    blocks, locs = gen.write_geo_csvs(geo, str(d))
+    dirs = []
+    for k in range(2):
+        files, _ = gen.mixed_batch(rng, geo, f"e{k}", n_files=40, n_records=160)
+        dirs.append(str(d / f"e{k}"))
+        gen.write_batch(dirs[-1], files)
+    return blocks, locs, dirs
+
+
+def test_batch_pays_only_for_its_own_files(spark, enriched_batches, tmp_path, monkeypatch):
+    """An enriched micro-batch builds its plan in under 2,000 py4j
+    commands, the second batch of a run reads no CSV file (the context
+    prepared its dims once), both batches' tables equal
+    enrich_records(ingest(...)), and release() frees the dims."""
+    from parsedmarc_go_spark import caching
+    from parsedmarc_go_spark.functions.enrich import EnrichmentContext, enrich_records
+    from parsedmarc_go_spark.functions.enrichdims import geo_dim_from_csv, load_dns_map
+    from parsedmarc_go_spark.sources.ingest import ingest, read_report_files
+    from parsedmarc_go_spark.streaming import daemon
+
+    blocks, locs, dirs = enriched_batches
+    as_of = _generator().AS_OF
+    spark.catalog.clearCache()  # start from a known-empty CacheManager
+    ctx = EnrichmentContext(geo_dim=geo_dim_from_csv(spark, blocks, locs),
+                            dns_map=load_dns_map(spark))
+    out = str(tmp_path / "out")
+    proc = daemon.make_batch_processor(out, ctx, as_of=as_of)
+    client = spark.sparkContext._gateway._gateway_client
+    real_send = client.send_command
+    sent = []
+
+    def counting_send(*args, **kwargs):
+        sent.append(1)
+        return real_send(*args, **kwargs)
+
+    csv_files_read = []
+    for k, d in enumerate(dirs):
+        batch = read_report_files(spark, d)
+        last_exec = max((e.executionId() for e in _sql_executions(spark)), default=-1)
+        sent.clear()
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting_send)
+            proc(batch, k)
+        assert len(sent) < 2000, f"batch {k}: {len(sent)} py4j commands"
+        csv_files_read.append(_files_read(spark, last_exec, "csv"))
+    assert csv_files_read[0] > 0 and csv_files_read[1] == 0, csv_files_read
+
+    for k, d in enumerate(dirs):
+        with caching.scope():
+            res = ingest(spark, d, as_of=as_of)
+            for name in daemon.STREAM_TABLES:
+                want = getattr(res, name)
+                if name in ("aggregate_records", "forensic_reports"):
+                    want = enrich_records(want, ctx)
+                got = (spark.read.parquet(os.path.join(out, name))
+                       .filter(f"__batch_id = {k}").drop("__batch_id"))
+                assert got.columns == want.columns
+                rows = sorted(map(repr, got.collect()))
+                assert rows and rows == sorted(map(repr, want.collect())), (k, name)
+    ctx.release()
+    assert _cache_is_empty(spark), "release() left the prepared dims cached"
+
+
+def test_batch_fill_runs_one_task_per_core(spark, enriched_batches, tmp_path):
+    """A batch read in more partitions than cores is extracted in at
+    most defaultParallelism tasks: no job of the batch runs more."""
+    from parsedmarc_go_spark.sources.ingest import read_report_files
+    from parsedmarc_go_spark.streaming.daemon import make_batch_processor
+
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.files.minPartitionNum", str(4 * cores))
+    try:
+        batch = read_report_files(spark, enriched_batches[2][0])
+        assert batch.rdd.getNumPartitions() > cores
+        last_job = max((j.jobId() for j in _jobs_after(spark, -1)), default=-1)
+        make_batch_processor(str(tmp_path / "out"), as_of=AS_OF)(batch, 0)
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    tasks = [j.numTasks() for j in _jobs_after(spark, last_job)]
+    assert tasks and max(tasks) <= cores, tasks
